@@ -27,6 +27,14 @@ sites to ``persist(StorageLevel.MEMORY_AND_DISK)`` (recomputable
 lineage, same single-evaluation effect) or reliable ``checkpoint()``
 with a checkpoint dir — the operators' correctness does not depend on
 which of the three materializers is used.
+No call site unpersists its checkpoint: the blocks are freed only
+when a driver GC lets the ContextCleaner reclaim the dropped RDD
+(``spark.cleaner.periodicGC.interval``, pinned to 2 min in
+``session.get_spark``). The highest-churn site is
+``features.target_encode``: ``feat_target_encode`` is rebuilt on every
+call (``_FRESH_EACH_CALL``), so each run of it leaves one more
+category-grain checkpoint for the cleaner, and a long-running serving
+session holds up to one GC interval's worth of them.
 """
 
 from __future__ import annotations

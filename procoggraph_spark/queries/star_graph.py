@@ -232,8 +232,12 @@ def chain_ec_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("pdbEntry").alias("entry"))
         .agg(
-            F.countDistinct("pdbProteinChain").alias("n_chains"),
-            F.countDistinct("ecID").alias("n_ecs"),
+            # set sizes, not two countDistincts: Spark rewrites several
+            # distinct aggregates into one Expand whose group order
+            # follows the hash of fresh expression ids, so each rebuild
+            # of this query could generate new code and recompile it
+            F.size(F.collect_set("pdbProteinChain")).cast("long").alias("n_chains"),
+            F.size(F.collect_set("ecID")).cast("long").alias("n_ecs"),
         )
     )
 

@@ -14,6 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# compiled classes the codegen cache keeps per JVM (see get_spark)
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "procoggraph_spark",
@@ -75,6 +78,23 @@ def get_spark(
         # (the default periodicGC interval) without one. Force the cycle
         # every 2 min; overridable via SPARK_GRAFT_CONF.
         .config("spark.cleaner.periodicGC.interval", "2min")
+        # Whole-stage codegen cache: every JVM that compiles (driver and
+        # executors alike) keeps the Janino classes of recent plans in
+        # one LRU cache, 100 entries by default. A served plan re-runs
+        # its generated code, so an evicted class is recompiled on
+        # every execution even when the plan itself is memoized: the
+        # 13-query dashboard mix generates 175 classes, and at 100
+        # entries every steady-state pass recompiled all of them (about
+        # 1.5-2.0 s of a 5.4-6.3 s pass). A sweep of all 194 registry
+        # queries at sf0.001 compiled 2 794 distinct classes (median 10
+        # per query, p90 29, max 193; 20 MB of bytecode); with all of
+        # them resident metaspace grew from 77 to 207 MB, and a second
+        # sweep compiled 0 classes in 44.6 s instead of 170.6 s. 4096
+        # holds that working set with ~45 % headroom. A static conf:
+        # the cache is sized once, when the JVM first compiles, so it
+        # can only be set here. tools/release_gate.py (stage
+        # codegen_residency) fails once the registry outgrows it.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master.startswith("local"):
         # single-JVM shuffle never crosses a network and its files sit in
@@ -134,6 +154,10 @@ def apply_adaptive_policy(
        already exceeds total cores and forced fine splits only add
        scheduling overhead.
 
+    A positive ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` replaces the shuffle
+    partition count in every regime (in 2 and 3 it is the count AQE
+    starts from).
+
     Returns the resulting AQE state."""
     total = 0
     try:
@@ -149,18 +173,18 @@ def apply_adaptive_policy(
         total = threshold_bytes  # unknown input: assume cluster regime
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     base = int(cpus) if cpus.isdigit() else 32
+    # site override of the shuffle width, honoured in every regime: the
+    # static partition count in regime 1, AQE's starting count in 2 and 3
+    env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
+    site = int(env) if env.isdigit() and int(env) > 0 else None
     if total < interactive_bytes:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
-        if env.isdigit() and int(env) > 0:
-            target = int(env)  # site override wins outright
-        else:
-            target = max(4, min(base, total // (2 << 20)))
+        target = site or max(4, min(base, total // (2 << 20)))
         spark.conf.set("spark.sql.shuffle.partitions", str(target))
         spark.conf.unset("spark.sql.files.minPartitionNum")
         return False
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", str(base))
+    spark.conf.set("spark.sql.shuffle.partitions", str(site or base))
     if total < threshold_bytes:
         spark.conf.set("spark.sql.files.minPartitionNum", str(2 * base))
     else:
@@ -178,6 +202,27 @@ def formatted_plan(df, mode: str = "formatted") -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), mode
     )
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Classes this JVM has compiled from generated code so far, and
+    the milliseconds spent compiling them: the running count and the
+    per-class times of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``
+    histogram, which records one sample per codegen-cache miss. Callers
+    diff two readings. Spark truncates each sample to whole ms, and the
+    histogram keeps a reservoir of 1 028 samples, so past that many
+    compiles the ms figure is the reservoir's mean scaled to the count.
+    Centralized here, like ``formatted_plan``, so this JVM-internal
+    touchpoint has one fix site."""
+    jvm = spark.sparkContext._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count = hist.getCount()
+    snap = hist.getSnapshot()
+    kept = snap.size()
+    if not kept:
+        return count, 0.0
+    kept_ms = jvm.java.util.Arrays.stream(snap.getValues()).sum()
+    return count, kept_ms * count / kept
 
 
 def register_sql_functions(spark: SparkSession) -> None:

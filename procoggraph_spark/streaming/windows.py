@@ -11,7 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from procoggraph_spark.functions.timeutil import epoch_seconds
 from procoggraph_spark.queries.common import dsum2, valid_ts
 
 
@@ -89,12 +88,17 @@ def session_windows_batch(
     """
     events = _with_event_time(events, ts_col)
     w = Window.partitionBy("user_id").orderBy(ts_col)
-    gap = epoch_seconds(ts_col) - F.lag(epoch_seconds(ts_col)).over(w)
+    # exact gap in microseconds, like the oracle's `> INTERVAL`: whole
+    # epoch seconds would merge a 1800.5 s gap into one session
+    micros = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    gap = micros - F.lag(micros).over(w)
     with_sess = (
         events.withColumn("_gap", gap)
         .withColumn(
             "_new_sess",
-            F.when(F.col("_gap").isNull() | (F.col("_gap") > gap_minutes * 60), 1).otherwise(0),
+            F.when(
+                F.col("_gap").isNull() | (F.col("_gap") > gap_minutes * 60 * 1_000_000), 1
+            ).otherwise(0),
         )
         .withColumn("_sess", F.sum("_new_sess").over(w))
     )

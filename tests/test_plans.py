@@ -6,6 +6,8 @@ results stay correct."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from procoggraph_spark.queries import registry
@@ -515,6 +517,10 @@ def test_target_encode_single_scan_broadcast_global(spark):
     df = QUERIES["feat_target_encode"](spark, SF_ORACLE)
     p = plan(spark, df)
     assert "Scan parquet" not in p  # the one scan sits in the checkpoint
+    # both consumers read ONE checkpointed RDD, not a checkpoint each
+    rdds = re.findall(r"(MapPartitionsRDD\[\d+\]) at localCheckpoint", p)
+    assert p.count("Scan ExistingRDD (") == 2 and len(rdds) == 2, p
+    assert len(set(rdds)) == 1, rdds
     assert "Window" not in p  # no single-partition pass over categories
     assert "BroadcastExchange" in p  # 1-row global attached by broadcast
     assert "CartesianProduct" not in p

@@ -71,6 +71,21 @@ def test_session_native_vs_batch(spark):
     assert native == batch
 
 
+def test_session_gap_is_exact_not_whole_seconds(spark):
+    """The session gap compares the exact interval, like the oracle's
+    `> INTERVAL '30 minutes'`: 1800.5 s splits a session, exactly
+    1800 s does not. The first gap runs from .1 s to .6 s past a
+    second, so whole epoch seconds would read it as 1800 and merge."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 100_000)
+    ts = [t0, t0 + dt.timedelta(seconds=1800.5),
+          t0 + dt.timedelta(seconds=1800.5 + 1800)]
+    ev = spark.createDataFrame([(1, x) for x in ts], "user_id long, ts timestamp")
+    got = sorted(r["n_events"] for r in session_windows_batch(ev, gap_minutes=30).collect())
+    assert got == [1, 2]
+
+
 def test_incremental_upsert_availablenow(spark, tmp_path):
     """The S16 cache pattern under streaming: new files arrive, a
     foreachBatch merge upserts only unseen keys (exactly-once shape)."""

@@ -17,6 +17,9 @@ Stages (each a subprocess, same interpreter):
                                            physical profile (exit = divergences)
   7. skew_probe                          — whale-key join: AQE skew-join, naive,
                                            and salted strategies must agree
+  7b. codegen_residency                  — every registry query twice at sf0.001;
+                                           the warm sweep must compile no class
+                                           (the codegen cache holds the registry)
   8. bench.py at $SPARK_GRAFT_SF_DIR     — must emit its JSON line with rc=0
   9. duckdb_gate (opt-in, --with-duckdb) — interleaved Spark-vs-DuckDB on the
                                            oracled headliners at sf0.1; exit
@@ -64,6 +67,7 @@ def stages(
         ("nulls", [py, "tools/empty_input_sweep.py", "--nulls"], {}),
         ("pinv", [py, "tools/partition_invariance_sweep.py"], {}),
         ("skew", [py, "tools/skew_probe.py"], {}),
+        ("codegen_residency", [py, "tools/codegen_residency.py"], {}),
         (
             "bench",
             [py, "bench.py"],
@@ -108,7 +112,7 @@ def main() -> int:
     print("\n=== release_gate summary ===")
     worst = 0
     for name, rc, dt in results:
-        print(f"  {'PASS' if rc == 0 else 'FAIL':4} {name:14} rc={rc:<4} {dt:8.1f}s")
+        print(f"  {'PASS' if rc == 0 else 'FAIL':4} {name:17} rc={rc:<4} {dt:8.1f}s")
         worst = max(worst, 0 if rc == 0 else 1)
     return worst
 
